@@ -131,6 +131,20 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     scans/exchanges.  Still pass a cached DataFrame when ``edges`` is an
     expensive derived plan (e.g. the href-extraction pipeline) — the one
     init scan plus any superstep resume re-executes it otherwise."""
+    # the whole call runs non-adaptive, init included: AQE would make each
+    # init stage its own re-planned job, and the init joins rely on the
+    # explicit num_partitions co-partitioning, not on runtime coalescing
+    with iterative_conf(spark):
+        result = _pagerank(spark, edges, params, checkpoint_dir, resume,
+                           lineage_table)
+    return PageRankResult(
+        result.state.select("id", "rank"),
+        result.supersteps, result.converged, result.metrics)
+
+
+def _pagerank(spark: SparkSession, edges: DataFrame, params: GraphParams,
+              checkpoint_dir: str | None, resume: bool,
+              lineage_table: str | None) -> SuperstepResult:
     e = prepared_edges(edges, params).cache()
     # cached so the heavy-hub broadcast build inside build_links reads the
     # same materialized table instead of re-running the repartition+distinct
@@ -147,18 +161,26 @@ def pagerank(spark: SparkSession, edges: DataFrame,
     # groupBy rides the adjacency's src partitioning (no exchange)
     degs = links.groupBy(F.col("src").alias("id")).agg(
         F.first("deg").alias("deg"))
-    n = nodes.count()          # also materializes the links cache
-    ranks0 = (
+    vdeg = (
         nodes.join(degs.hint("shuffle_hash"), "id", "left")
-        .select("id", F.lit(1.0 / n).alias("rank"),
-                F.coalesce("deg", F.lit(0)).alias("deg"))
-    ).cache()   # early supersteps reference the state 2-3x;
-    # without this the distinct/join init pipeline is re-derived each time
+        .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
+    ).cache()
+    # ONE init action: materializes the adjacency and (id, deg) caches and
+    # returns n together with the dangling count, which seeds superstep
+    # 0's dangling mass exactly (every initial rank is 1/n)
+    init = vdeg.agg(F.count("*").alias("n"),
+                    F.count(F.when(F.col("deg") == 0, 1)).alias("n_dangling")
+                    ).collect()[0]
+    n = init.n
+    # early supersteps reference the state 2-3x; the projection of the
+    # cached table keeps them off the distinct/join init pipeline
+    ranks0 = vdeg.select("id", F.lit(1.0 / n).alias("rank"), "deg")
     d = params.damping
 
     # state schema: (id, rank, deg); dangling sum for the NEXT superstep is
-    # carried on the driver, seeded from the initial state.
-    dangling_holder = {"value": None}
+    # carried on the driver, seeded from init (or, on resume, from the
+    # checkpointed state)
+    dangling_holder = {"value": init.n_dangling / n}
 
     def seed_dangling(state: DataFrame) -> float:
         return state.filter("deg = 0").agg(
@@ -211,11 +233,8 @@ def pagerank(spark: SparkSession, edges: DataFrame,
                              lineage_table=lineage_table)
     if resume and checkpoint_dir and driver.last_complete_superstep() is not None:
         dangling_holder["value"] = None  # recomputed from the checkpointed state
-    with iterative_conf(spark):
-        result: SuperstepResult = driver.run(ranks0, step, params.max_iters, resume)
+    result = driver.run(ranks0, step, params.max_iters, resume)
     links.unpersist()
-    ranks0.unpersist()
+    vdeg.unpersist()
     e.unpersist()
-    return PageRankResult(
-        result.state.select("id", "rank"),
-        result.supersteps, result.converged, result.metrics)
+    return result

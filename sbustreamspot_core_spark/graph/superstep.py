@@ -117,11 +117,18 @@ class SuperstepDriver:
         return best
 
     def _checkpoint(self, state: DataFrame, k: int, metrics: dict) -> DataFrame:
+        """Write superstep ``k``'s state, then return the re-read snapshot
+        cached and materialized: the per-partition lineage aggregation is
+        the action that fills the cache, and the re-read takes the written
+        schema instead of inferring it (a footer-reading job), so
+        truncating lineage costs the write plus one job."""
         d = self._step_dir(k)
         data_dir = os.path.join(d, "data")
         state.write.mode("overwrite").parquet(data_dir)
-        reread = self.spark.read.parquet(data_dir)
-        if self.write_lineage:
+        reread = self.spark.read.schema(state.schema).parquet(data_dir).cache()
+        if not self.write_lineage:
+            reread.count()
+        else:
             parts = _partition_lineage(reread)
             lineage = {
                 "superstep": k,
@@ -205,8 +212,7 @@ class SuperstepDriver:
                 # write from the (cached) state, reread to truncate lineage
                 reread = self._checkpoint(new_state, k, metrics)
                 new_state.unpersist()
-                new_state = reread.cache()
-                new_state.count()
+                new_state = reread
             elif is_ckpt:
                 # no storage checkpoint configured: still truncate the
                 # logical plan (it grows per superstep and Catalyst analysis

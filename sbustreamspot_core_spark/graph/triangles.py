@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import GraphParams
+from .superstep import iterative_conf
 
 
 def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
@@ -37,15 +38,17 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
     (edge (a,c) sees no common target since c's out-set misses b, and edge
     (b,c) would need b->w AND c->w).
 
-    Exchange budget (the former plan paid five): one skinny degree
-    aggregation (map-side combined, broadcast onto the edge stream), ONE
-    exchange of the oriented multiset building the deduped adjacency sets,
-    and one exchange re-keying the edge stream for the second adjacency
-    probe.  The edge side is re-derived by exploding the adjacency —
-    distinct by construction and co-partitioned with the first probe, so
-    neither a standalone edge-dedup exchange nor an adjacency cache is
-    needed; the identical adjacency subtrees share one exchange
-    (ReusedExchange, same pattern as banded_self_join_pairs)."""
+    Exchange budget (callers plan it under ``iterative_conf``: no AQE, no
+    auto-broadcast, so the whole count is one job): one skinny degree
+    aggregation (map-side combined, reused for both endpoints), two
+    exchanges of the skinny edge stream for the degree joins, ONE exchange
+    of the oriented multiset building the deduped adjacency sets, and one
+    exchange re-keying the edge stream for the second adjacency probe.
+    The edge side is re-derived by exploding the adjacency — distinct by
+    construction and co-partitioned with the first probe, so neither a
+    standalone edge-dedup exchange nor an adjacency cache is needed; the
+    identical adjacency subtrees share one exchange (ReusedExchange, same
+    pattern as banded_self_join_pairs)."""
     und = (
         edges.select(F.least("src", "dst").alias("u"),
                      F.greatest("src", "dst").alias("v"))
@@ -58,11 +61,11 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
     )
     d_u = deg.select(F.col("id").alias("u"), F.col("deg").alias("deg_u"))
     d_v = deg.select(F.col("id").alias("v"), F.col("deg").alias("deg_v"))
-    # plain equi-joins on purpose: AQE picks broadcast at runtime from the
-    # MEASURED size of the degree aggregate (~3 MB at bench scale) and falls
-    # back to shuffle joins when the vertex set is genuinely large — an
-    # explicit broadcast of an O(V) table would not survive 100 TB, and
-    # explicit shuffle_hash hints measured slower here (exp9, r7 notes)
+    # plain equi-joins: with auto-broadcast off they plan as sort-merge
+    # joins against the one degree exchange, which scale to any vertex
+    # set (an O(V) broadcast would not); shuffle_hash hints here measured
+    # no faster at 200k edges on 4 vCPUs (9.9-12.8 vs 10.1-12.0 CPU-s per
+    # warm count)
     with_deg = und.join(d_u, "u").join(d_v, "v")
     lo_first = (F.col("deg_u") < F.col("deg_v")) | (
         (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v")))
@@ -93,9 +96,10 @@ def _edge_common_out_neighbors(edges: DataFrame) -> DataFrame:
 def triangle_count(spark: SparkSession, edges: DataFrame,
                    params: GraphParams = GraphParams()) -> int:
     """Global triangle count of the simple undirected graph."""
-    n = (_edge_common_out_neighbors(edges)
-         .agg(F.coalesce(F.sum(F.size("w")), F.lit(0)).cast("long"))
-         .collect()[0][0])
+    with iterative_conf(spark):
+        n = (_edge_common_out_neighbors(edges)
+             .agg(F.coalesce(F.sum(F.size("w")), F.lit(0)).cast("long"))
+             .collect()[0][0])
     return int(n)
 
 
@@ -105,7 +109,12 @@ def triangle_count_per_vertex(spark: SparkSession, edges: DataFrame,
 
     Per closing intersection at edge (u, v) with common targets w: u and v
     each join |w| triangles, and each w joins one — the same multiset the
-    old closed-wedge union produced, without materializing wedges."""
+    old closed-wedge union produced, without materializing wedges.
+
+    The result is computed eagerly (a local checkpoint, one job) so that
+    it is planned under the same non-adaptive conf as ``triangle_count``;
+    a lazy result would be planned by the caller's action under the
+    session defaults instead."""
     tri = _edge_common_out_neighbors(edges).filter(F.size("w") > 0)
     # one pass over the intersections (not three scans of the join): each
     # edge row explodes into (u, |w|), (v, |w|) and one (w_i, 1) per target
@@ -115,5 +124,7 @@ def triangle_count_per_vertex(spark: SparkSession, edges: DataFrame,
         F.transform("w", lambda x: F.struct(x.alias("id"),
                                             F.lit(1).alias("c"))),
     )).alias("s")).select("s.id", "s.c")
-    return contribs.groupBy("id").agg(
+    per_vertex = contribs.groupBy("id").agg(
         F.sum("c").cast("long").alias("triangles"))
+    with iterative_conf(spark):
+        return per_vertex.localCheckpoint(eager=True)

@@ -5,6 +5,10 @@ import tempfile
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+# the whole suite shares one driver JVM; at the package's 24g default, G1
+# grows the heap past the RAM of a 16 GB host over the session and the
+# kernel OOM killer ends the JVM mid-suite.  8g bounds it with room to spare
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
 
 
 @pytest.fixture(scope="session")

@@ -697,27 +697,31 @@ def test_minhash_bands_rows_pinned(spark):
     """Round-7: minhash_bands moved from a posexplode(transform(...)) plan
     to an int-sequence explode with the key built in the projection (the
     transform lambda was a codegen fallback).  Pin the band table exactly,
-    including the null-sig doc: every doc still emits one row per band,
-    the key is the '_'-joined band slice, and a null sig yields null keys
-    (which equi-joins then drop, so null-text docs never pair)."""
+    including the null-sig docs: every doc still emits one row per band,
+    the key is the '_'-joined band slice, and a null sig yields EMPTY-STRING
+    keys, not nulls.  Empty keys do equi-join, so two null-sig docs share
+    every ('', band) bucket and pair with each other (never with a doc that
+    has a real signature); many null-text docs would make one hot
+    bucket."""
     from sbustreamspot_core_spark.operators.dedup import (
         minhash_bands, minhash_lsh_candidates)
 
     sig_a = list(range(1, 9))           # 8 hashes, 4 bands -> slices of 2
     sig_b = list(range(1, 5)) + [9, 10, 11, 12]   # shares bands 0 and 1
-    rows = [(1, sig_a), (2, sig_b), (3, [None] * 8)]
+    rows = [(1, sig_a), (2, sig_b), (3, [None] * 8), (4, [None] * 8)]
     sigs = spark.createDataFrame(rows, "id long, sig array<long>")
 
     got = {(r.id, r.band_idx): r.band_key
            for r in minhash_bands(sigs, bands=4).collect()}
-    assert len(got) == 3 * 4
+    assert len(got) == 4 * 4
     assert got[(1, 0)] == "1_2" and got[(1, 3)] == "7_8"
     assert got[(2, 0)] == "1_2" and got[(2, 2)] == "9_10"
     # array_join skips nulls entirely -> empty-string keys for a null sig
     # on BOTH the old transform path and the new projection (verified
     # byte-identical in the round-7 A/B); pin that so a future rewrite
     # that turns them into NULLs (or real keys) fails loudly here
-    assert all(got[(3, b)] == "" for b in range(4))
+    assert all(got[(d, b)] == "" for d in (3, 4) for b in range(4))
     pairs = sorted(map(tuple, minhash_lsh_candidates(
         sigs, bands=4, max_bucket_size=None).collect()))
-    assert pairs == [(1, 2)]
+    # the two null-sig docs pair through their shared empty keys
+    assert pairs == [(1, 2), (3, 4)]
