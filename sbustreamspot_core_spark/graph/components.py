@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,7 +71,17 @@ def _small_graph_components(spark: SparkSession, raw_edges: DataFrame,
     under both) — the symmetrize/distinct/repartition machinery existed
     only for the distributed supersteps, and building + counting it cost
     this path three of its five tiny jobs (measured: the clusters leg of
-    the web pipeline, OPTIMIZATION_r07.md)."""
+    the web pipeline, OPTIMIZATION_r07.md).
+
+    The id -> component map goes to Spark as an Arrow table of numpy
+    columns: the JVM builds the relation from Arrow batches with no
+    Python-worker task, also when the map is empty (an empty pandas frame
+    would fall back to the list path).  ``createDataFrame`` of a
+    Python list is ``sc.parallelize`` plus one pickled Python-worker task
+    per slice (4 on 4 cores), each with a fixed worker cost whatever its
+    row count: building and collecting a 28- or 1000-row map measured
+    1.1-1.4 CPU-s that way against 0.07 CPU-s via Arrow (driver, JVM and
+    workers, 4-vCPU VM)."""
     rows = raw_edges.select(F.col("src").alias("a"), F.col("dst").alias("b")) \
         .filter("a != b").collect()
     parent: dict = {}
@@ -87,8 +99,11 @@ def _small_graph_components(spark: SparkSession, raw_edges: DataFrame,
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     members = set(parent) | {r.a for r in rows} | {r.b for r in rows}
-    mapping = [(int(v), int(find(v))) for v in members]
-    map_df = spark.createDataFrame(mapping, "id long, component long")
+    ids = np.fromiter(members, dtype=np.int64, count=len(members))
+    comp = np.fromiter((find(v) for v in members), dtype=np.int64,
+                       count=len(members))
+    map_df = spark.createDataFrame(pa.table({"id": ids, "component": comp}),
+                                   "id long, component long")
     comps = (
         node_ids.distinct()
         .join(F.broadcast(map_df), "id", "left")

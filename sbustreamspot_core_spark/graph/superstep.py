@@ -25,6 +25,8 @@ from typing import Callable
 
 from contextlib import contextmanager
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -159,9 +161,14 @@ class SuperstepDriver:
                and s["summary"].get("run_id") == self._run_id
                for s in t.snapshots()):
             return
-        df = self.spark.createDataFrame(
-            [(k, p["partition_id"], p["rows"]) for p in parts],
-            "superstep int, partition_id int, rows long")
+        # an Arrow table reaches the JVM without parallelize and its
+        # pickled Python-worker tasks (see components._small_graph_components)
+        df = self.spark.createDataFrame(pa.table({
+            "superstep": np.full(len(parts), k, dtype=np.int32),
+            "partition_id": np.array([p["partition_id"] for p in parts],
+                                     dtype=np.int32),
+            "rows": np.array([p["rows"] for p in parts], dtype=np.int64),
+        }), "superstep int, partition_id int, rows long")
         summary = {m: v for m, v in metrics.items()
                    if isinstance(v, (int, float, bool, str))}
         t.append(df, summary={"superstep": k, "run_id": self._run_id,

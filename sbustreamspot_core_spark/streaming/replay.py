@@ -27,15 +27,22 @@ asserts in DEBUG builds, graph.cpp:346-363).
 
 Checkpointing: each batch writes a snapshot parquet (scores + assignments,
 mirroring main.cpp:394-398) plus a driver-state npz and a _COMPLETE marker;
-resume restarts after the last complete batch.
+resume restarts after the last complete batch.  The snapshot is built from
+driver state and written on the driver with pyarrow, so it costs no Spark
+job and no Python-worker task; it reads back with ``spark.read.parquet`` as
+``(gid long, cluster_id int, anomaly_score double)``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -125,9 +132,26 @@ class MicroBatchReplay:
                 best = k if best is None else max(best, k)
         return best
 
-    def _save_state(self, k: int, snapshot: DataFrame, n_edges: int) -> None:
+    def _snapshot(self) -> pd.DataFrame:
+        """Per-graph assignment and score, in gid order: the reference's
+        snapshot columns (main.cpp:394-398), UNSEEN where a graph has none."""
+        gids = sorted(self.projections)
+        return pd.DataFrame({
+            "gid": np.array(gids, dtype=np.int64),
+            "cluster_id": np.array(
+                [self.cluster_map.get(g, UNSEEN) for g in gids], dtype=np.int32),
+            "anomaly_score": np.array(
+                [self.anomaly_scores.get(g, float(UNSEEN)) for g in gids],
+                dtype=np.float64),
+        })
+
+    def _save_state(self, k: int, snapshot: pd.DataFrame, n_edges: int) -> None:
         d = self._batch_dir(k)
-        snapshot.write.mode("overwrite").parquet(os.path.join(d, "snapshot"))
+        snap_dir = os.path.join(d, "snapshot")
+        shutil.rmtree(snap_dir, ignore_errors=True)    # a re-run batch
+        os.makedirs(snap_dir)
+        pq.write_table(pa.Table.from_pandas(snapshot, preserve_index=False),
+                       os.path.join(snap_dir, "part-00000.parquet"))
         gids = sorted(self.projections)
         np.savez(
             os.path.join(d, "state.npz"),
@@ -232,12 +256,7 @@ class MicroBatchReplay:
                 self._update_clusters(int(g), delta)
 
             if self.checkpoint_dir:
-                snap = self.spark.createDataFrame(
-                    [(int(g), int(self.cluster_map.get(g, UNSEEN)),
-                      float(self.anomaly_scores.get(g, float(UNSEEN))))
-                     for g in sorted(self.projections)],
-                    "gid long, cluster_id int, anomaly_score double")
-                self._save_state(k, snap, len(batch_rows))
+                self._save_state(k, self._snapshot(), len(batch_rows))
 
         edges.unpersist()
         return {

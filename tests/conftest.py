@@ -27,6 +27,20 @@ def tmp_ckpt():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a Spark job group; return its result and the number
+    of jobs the group ran, read from the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 REFERENCE_EDGES = "/root/reference/test_edges.txt"
 REFERENCE_BOOTSTRAP = "/root/reference/test_bootstrap_clusters.txt"
 

@@ -17,6 +17,8 @@ from sbustreamspot_core_spark.graph.triangles import (
 )
 from sbustreamspot_core_spark.oracles.graph_oracle import triangle_count_oracle
 
+from .conftest import jobs_in_group
+
 SESSION_KEYS = ("spark.sql.adaptive.enabled",
                 "spark.sql.autoBroadcastJoinThreshold")
 
@@ -27,18 +29,6 @@ EDGES = ([(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (10, 11), (11, 12)]
          + [(i, i + 1) for i in range(20, 59, 3)])
 PARAMS = GraphParams(num_partitions=4, max_iters=2, tol=0.0,
                      checkpoint_interval=2, csr_block_size=16)
-
-
-def jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture()
