@@ -33,7 +33,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,7 +44,6 @@ from sbustreamspot_core_spark.graph.triangles import (
     triangle_count,
     triangle_count_per_vertex,
 )
-from sbustreamspot_core_spark.operators.ann import brute_force_topk
 from sbustreamspot_core_spark.operators.clustering import (
     assign_clusters,
     build_centroids,
@@ -345,88 +343,6 @@ def q_fingerprint(spark, sf_dir):
     return docs.select("doc_id", fingerprint_expr(F.col("text")).alias("fp"))
 
 
-def q_multimodal_decode(spark, sf_dir):
-    # REAL PNG decode (functions/codecs.py: stdlib zlib + numpy unfilter,
-    # all 5 row filters) + REAL GIF decode (functions/gif.py: variable-
-    # width LZW, interlace, animation — merged row, 50-row driver cap)
-    # over the committed payload fixtures; the expected dims/md5 were
-    # computed from the SOURCE pixel arrays before encoding, so the gate
-    # verifies decode recovers the pre-encoding data
-    from sbustreamspot_core_spark.operators.multimodal import decode_image
-    imgs = (spark.read.parquet(f"{FIXTURES}/png_expected.parquet")
-            .unionByName(
-                spark.read.parquet(f"{FIXTURES}/gif_expected.parquet")))
-    out = decode_image(imgs.select("id", "payload"))
-    return out.select(
-        "id", F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        F.col("channels").cast("int").alias("channels"),
-        F.md5("pixels").alias("pixel_md5"))
-
-
-def q_multimodal_jpeg(spark, sf_dir):
-    # REAL baseline-JFIF decode (functions/jpeg.py: from-scratch T.81
-    # Huffman + numpy IDCT) PLUS MJPEG-AVI container decode (functions/
-    # avi.py: RIFF walk, first frame chunk — merged row, 50-row driver
-    # cap).  JPEG is lossy, so the oracle pins exact dims/channels plus
-    # an A-PRIORI mean-abs-error bound against the committed PRE-encoding
-    # source pixels (non-circular; see tools/make_fixtures.py:
-    # jpeg_fixtures / avi_fixtures)
-    from sbustreamspot_core_spark.operators.multimodal import decode_image
-    fix = (spark.read.parquet(f"{FIXTURES}/jpeg_expected.parquet")
-           .unionByName(
-               spark.read.parquet(f"{FIXTURES}/avi_expected.parquet")))
-    dec = decode_image(fix.select("id", "payload"))
-
-    @F.pandas_udf("double")
-    def mae(px: pd.Series, src: pd.Series) -> pd.Series:
-        import numpy as np
-        return pd.Series([
-            float(np.abs(np.frombuffer(bytes(a), dtype=np.uint8)
-                         .astype(np.float64)
-                         - np.frombuffer(bytes(b), dtype=np.uint8)
-                         .astype(np.float64)).mean())
-            for a, b in zip(px, src)])
-
-    joined = dec.join(fix.select("id", "src_pixels", "mae_bound"), "id")
-    return joined.select(
-        "id", F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        F.col("channels").cast("int").alias("channels"),
-        (mae("pixels", "src_pixels") <= F.col("mae_bound"))
-        .cast("int").alias("mae_ok"))
-
-
-def q_multimodal_audio(spark, sf_dir):
-    # REAL 16-bit PCM WAV decode (stdlib wave) over the committed fixture;
-    # expected md5 is of the source int16 array bytes
-    from sbustreamspot_core_spark.operators.multimodal import decode_audio
-    wavs = spark.read.parquet(f"{FIXTURES}/wav_expected.parquet")
-    out = decode_audio(wavs.select("id", "payload"))
-    return out.select(
-        "id", F.col("sample_rate").cast("int").alias("sample_rate"),
-        F.col("n_frames").cast("long").alias("n_frames"),
-        F.col("channels").cast("int").alias("channels"),
-        F.md5("pcm").alias("pcm_md5"))
-
-
-def q_ann_topk(spark, sf_dir):
-    # brute-force exact top-k PLUS the IVF path (merged row, 50-row driver
-    # cap): with n_probe == n_cells the probe is exhaustive, so IVF's
-    # centroid build / cell routing / probe join / re-rank machinery must
-    # reproduce the exact ranking — the oracle emits neighbor_id twice
-    from sbustreamspot_core_spark.operators.ann import ivf_topk
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter("vec_id < 5")
-    bf = brute_force_topk(emb, queries, k=3).select(
-        "query_id", "rank", "neighbor_id")
-    ivf = ivf_topk(emb, queries, k=3, n_cells=8, n_probe=8,
-                   sample_size=256).select(
-        "query_id", "rank", F.col("neighbor_id").alias("ivf_neighbor_id"))
-    return bf.join(ivf, ["query_id", "rank"]).select(
-        "query_id", "rank", "neighbor_id", "ivf_neighbor_id")
-
-
 def q_pagerank3(spark, sf_dir):
     # G4+G5 merged (50-row driver cap, round 6 — freed a slot for the
     # SnapTable read surface): 3 PageRank supersteps joined with 2
@@ -550,23 +466,6 @@ def q_simhash_cands(spark, sf_dir):
     sh = simhash64(aug, n=5)
     return simhash_hamming_candidates(sh, radius=3, bands=4).select(
         "id_a", "id_b", "hamming")
-
-
-def q_embed_neardup(spark, sf_dir):
-    # exact embedding-cosine near-dup pairs (the verifier baseline; the LSH
-    # variant's recall against it is pytest-gated): plant near-parallel
-    # copies (vec_id + 1000, 2x + 1/64) of the first 250 vectors
-    from sbustreamspot_core_spark.operators.ann import cosine_neardup_pairs
-    emb = _t(spark, sf_dir, "embeddings").filter("vec_id < 250")
-    v = emb.select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("embedding"))
-    planted = v.select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.expr("transform(embedding, x -> x * 2 + 0.015625)")
-        .alias("embedding"))
-    u = v.unionByName(planted)
-    return cosine_neardup_pairs(u, threshold=0.9).select(
-        "id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -777,10 +676,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_lang_id": q_lang_id,
         "q_quality": q_quality,
         "q_fingerprint": q_fingerprint,
-        "q_multimodal_decode": q_multimodal_decode,
-        "q_multimodal_jpeg": q_multimodal_jpeg,
-        "q_multimodal_audio": q_multimodal_audio,
-        "q_ann_topk": q_ann_topk,
         "q_pagerank3": q_pagerank3,
         "q_connected_components": q_connected_components,
         "q_snaptable_timetravel": q_snaptable_timetravel,
@@ -791,7 +686,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_variant_docs": q_variant_docs,
         "q_simhash64": q_simhash64,
         "q_simhash_cands": q_simhash_cands,
-        "q_embed_neardup": q_embed_neardup,
         "q_dedup_clusters": q_dedup_clusters,
         "q_sketch_similarity": q_sketch_similarity,
         "q_lsh_candidates": q_lsh_candidates,
@@ -1197,45 +1091,6 @@ def oracle_sql() -> dict[str, str]:
                  CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS fp
           FROM documents
         """,
-        "q_multimodal_decode": f"""
-          SELECT id, width, height, channels, pixel_md5
-          FROM read_parquet('{FIXTURES}/png_expected.parquet')
-          UNION ALL
-          SELECT id, width, height, channels, pixel_md5
-          FROM read_parquet('{FIXTURES}/gif_expected.parquet')
-        """,
-        "q_multimodal_jpeg": f"""
-          SELECT id, width, height, channels, 1 AS mae_ok
-          FROM read_parquet('{FIXTURES}/jpeg_expected.parquet')
-          UNION ALL
-          SELECT id, width, height, channels, 1 AS mae_ok
-          FROM read_parquet('{FIXTURES}/avi_expected.parquet')
-        """,
-        "q_multimodal_audio": f"""
-          SELECT id, sample_rate, n_frames, channels, pcm_md5
-          FROM read_parquet('{FIXTURES}/wav_expected.parquet')
-        """,
-        "q_ann_topk": """
-          WITH q AS (SELECT vec_id AS query_id,
-                            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-                     FROM embeddings WHERE vec_id < 5),
-          v AS (SELECT vec_id AS neighbor_id,
-                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS nv
-                FROM embeddings),
-          scored AS (
-            SELECT query_id, neighbor_id,
-                   list_cosine_similarity(qv, nv) AS cosine
-            FROM q, v WHERE neighbor_id != query_id),
-          ranked AS (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC,
-                                               neighbor_id ASC) AS rank
-            FROM scored)
-          SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id,
-                 neighbor_id AS ivf_neighbor_id
-          FROM ranked WHERE rank <= 3
-        """,
         "q_pagerank3": pagerank_sql,
         "q_connected_components": cc_sql,
         "q_snaptable_timetravel": snaptable_sql,
@@ -1441,24 +1296,6 @@ def oracle_sql() -> dict[str, str]:
                     WHERE a.id < b.id)
           SELECT id_a, id_b, CAST(hamming AS INT) AS hamming
           FROM pairs WHERE hamming <= 3
-        """,
-        # exact cosine near-dup over embeddings + planted near-parallel
-        # copies (2x + 1/64): planted pairs land at ~0.998, every other
-        # pair below 0.45, so the 0.9 threshold is ulp-proof cross-engine
-        "q_embed_neardup": """
-          WITH v AS (SELECT vec_id,
-                            list_transform(embedding, x -> CAST(x AS DOUBLE))
-                              AS vv
-                     FROM embeddings WHERE vec_id < 250),
-          p AS (SELECT vec_id + 1000 AS vec_id,
-                       list_transform(vv, x -> x * 2 + 0.015625) AS vv
-                FROM v),
-          u AS (SELECT * FROM v UNION ALL SELECT * FROM p),
-          scored AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                            list_cosine_similarity(a.vv, b.vv) AS cosine
-                     FROM u a JOIN u b ON a.vec_id < b.vec_id)
-          SELECT id_a, id_b, round(cosine, 6) AS cosine
-          FROM scored WHERE cosine >= 0.9
         """,
         "q_dedup_clusters":
             minhash_cte.replace("WITH hp", "WITH RECURSIVE hp") + """,

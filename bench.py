@@ -32,7 +32,6 @@ from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
 from sbustreamspot_core_spark.graph.components import connected_components
 from sbustreamspot_core_spark.graph.pagerank import pagerank
 from sbustreamspot_core_spark.graph.triangles import triangle_count
-from sbustreamspot_core_spark.operators.ann import brute_force_topk
 from sbustreamspot_core_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
@@ -67,7 +66,7 @@ WARMUP = int(os.environ.get("BENCH_WARMUP", "1"))
 R4_RECORDS = {
     "pagerank": 12.498, "connected_components": 6.188,
     "triangle_count": 7.643, "streamspot_sketch_lsh": 1.603,
-    "minhash_dedup": 5.389, "ann_topk": 0.725, "lineitem_agg": 0.324,
+    "minhash_dedup": 5.389, "lineitem_agg": 0.324,
     "web_pipeline_20k_pages": 4.753,
 }
 # the records are absolute wall-clock seconds measured under ONE specific
@@ -151,11 +150,6 @@ def main() -> None:
         extras["minhash_candidates"] = n
         sigs.unpersist()
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-    def run_ann():
-        brute_force_topk(emb, emb.filter("vec_id < 8"), k=10).count()
-
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
 
     def run_lineitem():
@@ -201,7 +195,6 @@ def main() -> None:
         ("triangle_count", run_triangles),
         ("streamspot_sketch_lsh", run_sketches),
         ("minhash_dedup", run_minhash),
-        ("ann_topk", run_ann),
         ("lineitem_agg", run_lineitem),
         ("web_pipeline_20k_pages", run_web),
     ]

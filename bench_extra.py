@@ -36,7 +36,6 @@ from sbustreamspot_core_spark.config import GraphParams, StreamSpotParams
 from sbustreamspot_core_spark.graph.components import connected_components
 from sbustreamspot_core_spark.graph.pagerank import pagerank
 from sbustreamspot_core_spark.graph.triangles import triangle_count
-from sbustreamspot_core_spark.operators.ann import brute_force_topk
 from sbustreamspot_core_spark.operators.dedup import (
     exact_jaccard_for_pairs,
     minhash_lsh_candidates,
@@ -100,7 +99,6 @@ def main() -> None:
     )
     ss_params = StreamSpotParams(chunk_length=10, L=1000, B=50, R=20)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
 
     # ---- phase definitions ---------------------------------------------
@@ -149,11 +147,6 @@ def main() -> None:
         out = minhash_lsh_candidates(sigs, bands=16, max_bucket_size=None)
         sigs.unpersist()
         return out
-
-    def ph_ann():
-        df = brute_force_topk(emb, emb.filter("vec_id < 8"), k=10)
-        df.count()
-        return df
 
     def ph_lineitem():
         df = (li.filter(F.col("l_shipdate") < "1998-01-01")
@@ -234,7 +227,6 @@ def main() -> None:
         ("streamspot_sketch_lsh", ph_sketches),
         ("minhash_sigs", ph_minhash_sigs),
         ("minhash_lsh", ph_minhash_lsh),
-        ("ann_topk", ph_ann),
         ("lineitem_agg", ph_lineitem),
         ("web_pipeline", ph_web),
         ("dedup10x_gen", ph_d10_gen),

@@ -12,9 +12,8 @@ codec path is implemented from the public specs with nothing but stdlib:
 - WAV: 16-bit PCM via the stdlib ``wave`` module (an independent parser,
   so WAV decode is pinned by a codec we did not write).
 
-These back the real (non-fake) paths of operators/multimodal.py
-(reference parity target: the multimodal decode plumbing, SURVEY.md §2;
-no counterpart in sbustreamspot-core, which is graph-only).
+No engine path calls these codecs; no counterpart in sbustreamspot-core,
+which is graph-only.  They stay only until their deletion (ROADMAP).
 """
 
 from __future__ import annotations

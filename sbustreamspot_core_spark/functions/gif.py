@@ -3,10 +3,8 @@
 Implemented from the public GIF89a specification (CompuServe, 1990;
 Appendix F defines the LZW variant) with nothing but numpy — no image
 library ships in this container.  Complements functions/codecs.py (PNG/WAV)
-and functions/jpeg.py; together they back the real decode paths of
-operators/multimodal.py (reference parity target: multimodal decode
-plumbing, SURVEY.md §2; no counterpart in sbustreamspot-core, which is
-graph-only).
+with the same stdlib-only approach.  No engine path calls it; no counterpart in sbustreamspot-core, which is
+graph-only.  It stays only until its deletion (ROADMAP).
 
 Decoder subset:
 - global + local color tables, interlaced and non-interlaced images,
@@ -15,8 +13,7 @@ Decoder subset:
   2 (restore to background) and 3 (restore to previous).  Anything
   malformed raises GifFormatError.
 - animations decode to a (n_frames, height, width, 3) uint8 array of
-  fully-composited RGB canvases — this is the container behind the
-  engine's frame-sampling path (operators/multimodal.py:sample_frames).
+  fully-composited RGB canvases.
 
 Encoder subset (fixture/test writer): full-frame images over one global
 color table built from the frames' distinct colors (<= 256), optional

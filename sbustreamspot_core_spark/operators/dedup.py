@@ -9,7 +9,6 @@
   — the classic shingle->minhash->band->bucket-join pipeline.
 - SimHash near-dup: 64-bit sign-projection over the same portable base hash;
   near-dups = sketches within a Hamming radius via band-join candidates.
-- embedding cosine near-dup: see operators.ann (brute-force + LSH-bucketed).
 
 Portability: the base hash is the first 60 bits of md5(shingle) parsed as an
 integer — computable bit-identically by Spark JVM expressions

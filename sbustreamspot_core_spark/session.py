@@ -1,6 +1,6 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults are sized for the sandbox (local[N] threads, single JVM);
+Local-mode defaults are sized from the host (local[N] threads, single JVM);
 on a real cluster the same settings apply per-executor via spark-submit conf.
 """
 
@@ -48,10 +48,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    if cpus is None:  # the CPUs this process may run on
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    # a quarter of physical RAM, as perfbench/host.py sizes its heap (uncapped)
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY", f"{ram // 4 >> 20}m")
     ext_broadcast = _submit_conf_value("spark.sql.autoBroadcastJoinThreshold")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -64,7 +67,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # local-mode shuffles are disk-bound through /tmp; tmpfs keeps the
@@ -77,10 +80,9 @@ def get_spark(
         # volume saturates the memory/IO channel (64M-edge supersteps at 32
         # cores: fastest config measured); at bench-scale shuffles (2M
         # edges) its CPU cost LOSES 37.2 -> 44.8 s suite-wide.  Volume-
-        # dependent, not core-count-dependent — so lz4 stays the default
-        # and large-shuffle jobs opt in via SPARK_GRAFT_CODEC=zstd
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_CODEC", "lz4"))
+        # dependent, not core-count-dependent — so lz4 is the codec and a
+        # large-shuffle job can pass zstd through extra_conf
+        .config("spark.io.compression.codec", "lz4")
         # collect_list/collect_set aggregations (CSR adjacency build,
         # triangle out-neighbor sets, chunk tables) run through
         # ObjectHashAggregate, whose default sort-based fallback after 128
@@ -91,9 +93,8 @@ def get_spark(
         # MBs.  Measured r7 (interleaved, tools/r7 notes): triangles
         # 12.5->9.8 s cold / 8.8->7.1 s warm, pagerank 20.6->10.4 s cold /
         # 9.1->8.0 s warm.  Deployments with unbounded per-group buffers
-        # (no block cap) should lower it via the env knob.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(128 * 1024)))
+        # (no block cap) should lower it through extra_conf.
+        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
         # static: the generated-class cache must hold the graph suite's
         # working set.  One pass of PageRank + CC + LPA + triangles
         # compiles 224-243 distinct classes; at Spark's default of 100

@@ -5,9 +5,10 @@ import tempfile
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-# the whole suite shares one driver JVM; at the package's 24g default, G1
-# grows the heap past the RAM of a 16 GB host over the session and the
-# kernel OOM killer ends the JVM mid-suite.  8g bounds it with room to spare
+# the whole suite shares one driver JVM; a fixed 8g gives it the same heap on
+# every host (the package default is a quarter of the host's RAM) and stays
+# inside a 16 GB host, where a 24g heap grew past the RAM mid-suite and the
+# kernel OOM killer ended the JVM
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
 
 

@@ -1,14 +1,12 @@
-"""Pure-stdlib codec layer (functions/codecs.py): PNG decode/encode and
-WAV/PCM, plus the real (non-fake) multimodal operator paths."""
+"""Pure-stdlib codec layer: PNG decode/encode and WAV/PCM
+(functions/codecs.py), and GIF LZW/frames (functions/gif.py)."""
 
-import hashlib
 import struct
 import zlib
 from binascii import crc32
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from sbustreamspot_core_spark.functions.codecs import (
     PngFormatError,
@@ -16,11 +14,6 @@ from sbustreamspot_core_spark.functions.codecs import (
     png_encode,
     wav_decode,
     wav_encode,
-)
-from sbustreamspot_core_spark.operators.multimodal import (
-    decode_audio,
-    decode_image,
-    sample_frames,
 )
 
 
@@ -102,74 +95,6 @@ def test_wav_roundtrip_and_subset():
     mono = rng.integers(-32768, 32768, size=301).astype("<i2")
     rate, out = wav_decode(wav_encode(8000, mono))
     assert out.shape == (301, 1) and np.array_equal(out[:, 0], mono)
-
-
-def test_decode_image_spark_real_path(spark):
-    # distributed PNG decode over the committed fixture == the expected
-    # source-array dims/md5 computed BEFORE encoding
-    imgs = spark.read.parquet("/root/repo/fixtures/png_expected.parquet")
-    got = decode_image(imgs.select("id", "payload")).withColumn(
-        "got_md5", F.md5("pixels")).drop("pixels")
-    joined = got.join(
-        imgs.select("id", F.col("width").alias("ew"),
-                    F.col("height").alias("eh"),
-                    F.col("channels").alias("ec"), "pixel_md5"), "id")
-    rows = joined.collect()
-    assert len(rows) == 24
-    for r in rows:
-        assert (r.width, r.height, r.channels) == (r.ew, r.eh, r.ec)
-        assert r.got_md5 == r.pixel_md5
-    # unsupported-format payload on the real path raises cleanly (GIF is a
-    # real path since round 5, so probe with a BMP-ish magic instead)
-    bad = spark.createDataFrame([(1, bytearray(b"BMxxnot-an-image"))],
-                                "id long, payload binary")
-    with pytest.raises(Exception, match="no codec for format"):
-        decode_image(bad).collect()
-    # a malformed GIF surfaces the codec's own format error
-    badgif = spark.createDataFrame([(1, bytearray(b"GIF89a...."))],
-                                   "id long, payload binary")
-    with pytest.raises(Exception, match="not a GIF|GifFormatError"):
-        decode_image(badgif).collect()
-
-
-def test_decode_audio_and_sample_frames_spark(spark):
-    wavs = spark.read.parquet("/root/repo/fixtures/wav_expected.parquet")
-    got = decode_audio(wavs.select("id", "payload")).withColumn(
-        "got_md5", F.md5("pcm"))
-    joined = {r.id: r for r in got.join(
-        wavs.select("id", F.col("sample_rate").alias("er"),
-                    F.col("n_frames").alias("en"),
-                    F.col("channels").alias("ec"), "pcm_md5"),
-        "id").collect()}
-    assert len(joined) == 8
-    for r in joined.values():
-        assert (r.sample_rate, r.n_frames, r.channels) == (r.er, r.en, r.ec)
-        assert r.got_md5 == r.pcm_md5
-
-    # real frame sampling: every 2nd 1024-sample block, local replica oracle
-    frames = sample_frames(wavs.select("id", "payload"), every_n=2).collect()
-    local = {r.id: wav_decode(bytes(r.payload))
-             for r in wavs.select("id", "payload").collect()}
-    seen = set()
-    for fr in frames:
-        rate_pcm = local[fr.id][1]
-        expect = rate_pcm[fr.frame_idx * 1024:(fr.frame_idx + 1) * 1024]
-        assert bytes(fr.frame) == expect.tobytes()
-        seen.add((fr.id, fr.frame_idx))
-    for i, (_, pcm) in local.items():
-        n_blocks = max(1, -(-pcm.shape[0] // 1024))
-        assert {(i, b) for b in range(0, n_blocks, 2)} <= seen
-
-
-def test_fixture_md5_is_of_source_arrays():
-    # regression guard on the non-circularity claim: decode one committed
-    # payload locally and confirm the md5 column matches the decoded pixels
-    import pyarrow.parquet as pq
-    t = pq.read_table("/root/repo/fixtures/png_expected.parquet").to_pylist()
-    r = t[0]
-    arr = png_decode(r["payload"])
-    assert hashlib.md5(arr.tobytes()).hexdigest() == r["pixel_md5"]
-    assert arr.shape == (r["height"], r["width"], r["channels"])
 
 
 # ------------------------------------------------------------------- GIF
@@ -317,27 +242,3 @@ def test_gif_errors():
         many = np.stack([i % 256, i // 256, np.zeros_like(i)],
                         axis=1).astype(np.uint8).reshape(17, 16, 3)
         gif_encode(many)
-
-
-def test_gif_spark_decode_and_frame_sampling(spark):
-    """decode_image returns the first composited frame; sample_frames emits
-    every-n-th animation canvas — both over the Arrow batch path."""
-    from sbustreamspot_core_spark.functions.gif import gif_encode
-
-    rng = np.random.default_rng(29)
-    frames = (rng.integers(0, 100, size=(7, 9, 11)).astype(np.uint8)[..., None]
-              * np.array([1, 1, 1], dtype=np.uint8))
-    still = (rng.integers(0, 50, size=(6, 8)).astype(np.uint8)[..., None]
-             * np.array([1, 1, 1], dtype=np.uint8))
-    df = spark.createDataFrame(
-        [(0, bytearray(gif_encode(frames))),
-         (1, bytearray(gif_encode(still, interlace=True)))],
-        "id long, payload binary")
-    dec = {r.id: r for r in decode_image(df).collect()}
-    assert (dec[0].width, dec[0].height, dec[0].channels) == (11, 9, 3)
-    assert bytes(dec[0].pixels) == frames[0].tobytes()
-    assert bytes(dec[1].pixels) == still.tobytes()
-    sampled = sample_frames(df.filter("id = 0"), every_n=3).collect()
-    assert [r.frame_idx for r in sampled] == [0, 3, 6]
-    for r in sampled:
-        assert bytes(r.frame) == frames[r.frame_idx].tobytes()

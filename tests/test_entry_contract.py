@@ -1,5 +1,5 @@
 """In-suite smoke of the driver contract: entry() + a representative subset
-of queries() vs their DuckDB oracles at sf0.001 (the full 27-query sweep runs
+of queries() vs their DuckDB oracles at sf0.001 (the full 45-query sweep runs
 via tools/validate_entry.py at sf0.01)."""
 
 import math
@@ -22,7 +22,7 @@ SUBSET = [
 def con():
     c = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
+              "lineitem", "events", "documents"]:
         c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return c
 

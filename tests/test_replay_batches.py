@@ -8,10 +8,12 @@ engine, the small-graph components path nor a superstep lineage commit
 calls ``sc.parallelize``.
 """
 
+import dataclasses
 import json
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,6 +30,7 @@ from sbustreamspot_core_spark.operators.shingles import (
     build_shingles,
 )
 from sbustreamspot_core_spark.operators.sketch import build_sketches
+from sbustreamspot_core_spark.oracles.streamspot_oracle import SequentialStreamSpot
 from sbustreamspot_core_spark.sources.bootstrap import BootstrapClusters
 from sbustreamspot_core_spark.streaming.replay import (
     MicroBatchReplay,
@@ -219,6 +222,41 @@ def test_replay_resume_matches_straight_run(spark, inputs, tmp_path):
         assert np.array_equal(resumed.projections[g], proj), g
     assert np.array_equal(resumed.centroids, straight.centroids)
     assert resumed.last_complete_batch() == 2
+
+
+def test_per_edge_replay_matches_sequential_oracle(spark, inputs, tmp_path):
+    """At interval=1 each micro-batch is one edge: every batch snapshot must
+    equal the per-edge simulator's state after the same edge of the same
+    round-robin stream, with the edge window evicting along the way."""
+    train, test, _, _ = inputs
+    params = dataclasses.replace(PARAMS, cluster_update_interval=1,
+                                 max_num_edges=5)
+    test_seq = assign_replay_seq(test).cache()
+    # the replay order is the stream_rows order the simulator is fed
+    assert [r.seq for r in test_seq.orderBy("replay_seq").collect()] == list(
+        range(N_TEST))
+    out = MicroBatchReplay(spark, params, BOOT, train,
+                           checkpoint_dir=str(tmp_path)).run(
+        test_seq, resume=False)
+    test_seq.unpersist()
+
+    sim = SequentialStreamSpot(
+        params, BOOT.clusters, BOOT.thresholds, BOOT.global_threshold,
+        {g: graph_edges(g, t) for g, t in TRAIN.items()})
+    for k, (*edge, gid, _) in enumerate(stream_rows()):
+        sim.process_edge(tuple(edge), gid)
+        snap = pq.read_table(tmp_path / f"batch={k}" / "snapshot").to_pylist()
+        gids = sorted(sim.projections)
+        assert [(r["gid"], r["cluster_id"]) for r in snap] == [
+            (g, sim.cluster_map.get(g, UNSEEN)) for g in gids], k
+        assert [r["anomaly_score"] for r in snap] == pytest.approx(
+            [sim.anomaly_scores.get(g, float(UNSEEN)) for g in gids]), k
+
+    assert out["batches"] == N_TEST
+    assert out["cluster_map"] == sim.cluster_map
+    assert out["anomaly_scores"].keys() == sim.anomaly_scores.keys()
+    for gid, score in sim.anomaly_scores.items():
+        assert out["anomaly_scores"][gid] == pytest.approx(score), gid
 
 
 def test_lineage_commit_skips_parallelize(spark, tmp_path, monkeypatch):

@@ -1,8 +1,6 @@
-"""Training-data pipeline ops: dedup suite, similarity search, text
-analysis, multimodal plumbing — vs python/numpy oracles on the driver
-testdata (sf0.001)."""
+"""Training-data pipeline ops: dedup suite and text analysis — vs
+python/numpy oracles on the driver testdata (sf0.001)."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,11 +10,6 @@ from sbustreamspot_core_spark.functions.text import (
     quality_score_cols,
     token_count_udf,
 )
-from sbustreamspot_core_spark.operators.ann import (
-    brute_force_topk,
-    ivf_topk,
-    lsh_topk,
-)
 from sbustreamspot_core_spark.operators.dedup import (
     exact_dedup,
     minhash_jaccard_estimate,
@@ -25,12 +18,6 @@ from sbustreamspot_core_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from sbustreamspot_core_spark.operators.multimodal import (
-    byte_histogram_features,
-    decode_image,
-    sample_frames,
-    sniff_metadata,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,11 +25,6 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
 def test_exact_dedup_matches_python(spark, docs):
@@ -106,48 +88,6 @@ def test_simhash_near_dup_consistency(spark, docs):
             assert len(vals) == 1
 
 
-def test_brute_force_topk_matches_numpy(spark, embeddings):
-    corpus = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-              for r in embeddings.collect()}
-    queries = embeddings.filter("vec_id < 3")
-    got = {}
-    for r in brute_force_topk(embeddings, queries, k=4).collect():
-        got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
-    for qid in [0, 1, 2]:
-        q = corpus[qid]
-        sims = {}
-        for nid, v in corpus.items():
-            if nid == qid:
-                continue
-            sims[nid] = float(q @ v / (np.linalg.norm(q) * np.linalg.norm(v)))
-        expect = sorted(sims.items(), key=lambda kv: (-kv[1], kv[0]))[:4]
-        got_q = sorted(got[qid])
-        for (rank, nid, cos), (enid, ecos) in zip(got_q, expect):
-            assert nid == enid
-            assert cos == pytest.approx(ecos)
-
-
-def test_lsh_and_ivf_topk_recall(spark, embeddings):
-    queries = embeddings.filter("vec_id < 5")
-    exact = {}
-    for r in brute_force_topk(embeddings, queries, k=3).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-    lsh = {}
-    for r in lsh_topk(embeddings, queries, k=3, n_planes=4).collect():
-        lsh.setdefault(r.query_id, set()).add(r.neighbor_id)
-    ivf = {}
-    for r in ivf_topk(embeddings, queries, k=3, n_cells=4, n_probe=2).collect():
-        ivf.setdefault(r.query_id, set()).add(r.neighbor_id)
-    # approximate methods: sane shape + nonzero recall overall
-    lsh_hits = sum(len(exact[q] & lsh.get(q, set())) for q in exact)
-    ivf_hits = sum(len(exact[q] & ivf.get(q, set())) for q in exact)
-    assert lsh_hits > 0 and ivf_hits > 0
-    for q, s in lsh.items():
-        assert len(s) <= 3
-    for q, s in ivf.items():
-        assert len(s) <= 3
-
-
 def test_text_analysis_columns(spark, docs):
     out = docs.select(
         "doc_id", "text",
@@ -170,39 +110,6 @@ def test_text_analysis_columns(spark, docs):
         "doc_id", fingerprint_udf(F.col("text")).alias("fp")).collect()}
     for r in out:
         assert again[r.doc_id] == r.fp
-
-
-def test_multimodal_plumbing(spark, docs):
-    payloads = docs.select(
-        F.col("doc_id").alias("id"),
-        F.encode("text", "utf-8").alias("payload"))
-    meta = sniff_metadata(payloads).collect()
-    for r in meta:
-        assert r.n_bytes > 0
-        assert r.format in {"png", "jpeg", "gif", "riff", "mp3", "mp4ish",
-                            "unknown", "empty"}
-    feats = byte_histogram_features(payloads).collect()
-    for r in feats:
-        assert len(r.features) == 16
-        assert abs(sum(r.features) - 1.0) < 1e-3
-
-    decoded = decode_image(payloads.limit(10), fake=True).collect()
-    assert len(decoded) == 10
-    for r in decoded:
-        assert (r.width, r.height, r.channels) == (4, 4, 3)
-        assert len(bytes(r.pixels)) == 48
-    # determinism of the fake decode
-    again = {r.id: bytes(r.pixels)
-             for r in decode_image(payloads.limit(10), fake=True).collect()}
-    for r in decoded:
-        assert again[r.id] == bytes(r.pixels)
-
-    frames = sample_frames(payloads.limit(5), every_n=1, fake=True).collect()
-    assert len(frames) >= 5
-
-    # real path on a non-image payload raises cleanly (only PNG has a codec)
-    with pytest.raises(Exception, match="no codec for format"):
-        decode_image(payloads.limit(1), fake=False).collect()
 
 
 def test_text_exprs_match_python_reference(spark):
@@ -313,32 +220,7 @@ def test_simhash_hamming_candidates_match_brute_force(spark):
     sh.unpersist()
 
 
-def test_cosine_neardup_lsh_recall(spark, embeddings):
-    # LSH near-dup pairs vs the exact verifier on planted near-parallel
-    # copies: multi-table hyperplane banding must recover >= 90% of them
-    from sbustreamspot_core_spark.operators.ann import (
-        cosine_neardup_pairs,
-        cosine_neardup_pairs_lsh,
-    )
-    v = embeddings.filter("vec_id < 200").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    planted = v.select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.expr("transform(embedding, x -> x * 2 + 0.015625)").alias("embedding"))
-    u = v.unionByName(planted).cache()
-    exact = {(r.id_a, r.id_b)
-             for r in cosine_neardup_pairs(u, threshold=0.9).collect()}
-    assert len(exact) == 200          # exactly the planted pairs
-    approx = {(r.id_a, r.id_b)
-              for r in cosine_neardup_pairs_lsh(
-                  u, threshold=0.9, n_planes=8, n_tables=4).collect()}
-    assert approx <= exact            # same threshold -> no false positives
-    assert len(approx & exact) / len(exact) >= 0.9
-    u.unpersist()
-
-
 def test_star_reduction_stats_and_plane_sizing(spark):
-    from sbustreamspot_core_spark.operators.ann import recommended_n_planes
     from sbustreamspot_core_spark.operators.dedup import star_reduction_stats
     rows = ([(i, 0, 7) for i in range(30)]               # one bucket of 30
             + [(100 + i, 0, 100 + i) for i in range(10)])  # 10 singletons
@@ -348,10 +230,6 @@ def test_star_reduction_stats_and_plane_sizing(spark):
     assert abs(s.hot_frac - 0.75) < 1e-9
     s2 = star_reduction_stats(banded, ["band_idx", "band_val"], None).first()
     assert (s2.hot_rows, s2.hot_buckets) == (0, 0)
-    # sizing: expected occupancy n / 2^planes <= target, floor of 4 planes
-    assert recommended_n_planes(1_000_000, target_bucket=1024) == 10
-    assert recommended_n_planes(100, target_bucket=1024) == 4
-    assert recommended_n_planes(1 << 40, target_bucket=1) == 40
 
 
 def test_hot_bucket_star_reduction_preserves_clusters(spark):
@@ -458,36 +336,6 @@ def test_hot_bucket_over_default_cap_pair_and_cluster_contract(spark):
     verified.unpersist()
 
 
-def test_resize_images_exact(spark):
-    # nearest-neighbor resize: exact integer sample grid, pinned by hand
-    from sbustreamspot_core_spark.functions.codecs import png_encode
-    from sbustreamspot_core_spark.operators.multimodal import (
-        decode_image,
-        resize_images,
-    )
-    # 4x4 RGB ramp: pixel (y, x) = (y*40, x*40, y*10+x)
-    arr = np.zeros((4, 4, 3), dtype=np.uint8)
-    for y in range(4):
-        for x in range(4):
-            arr[y, x] = (y * 40, x * 40, y * 10 + x)
-    payloads = spark.createDataFrame(
-        [(1, bytearray(png_encode(arr)))], "id long, payload binary")
-    decoded = decode_image(payloads, fake=False)
-    out = resize_images(decoded, out_w=2, out_h=2).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.width, r.height, r.channels) == (2, 2, 3)
-    got = np.frombuffer(bytes(r.pixels), dtype=np.uint8).reshape(2, 2, 3)
-    # src index floor(i * 4 / 2) -> rows/cols [0, 2]
-    assert np.array_equal(got, arr[np.ix_([0, 2], [0, 2])])
-    # upscale roundtrip: 2x2 -> 4x4 repeats each pixel 2x2
-    up = resize_images(
-        resize_images(decoded, out_w=2, out_h=2), out_w=4, out_h=4).collect()[0]
-    gup = np.frombuffer(bytes(up.pixels), dtype=np.uint8).reshape(4, 4, 3)
-    assert np.array_equal(gup, np.kron(got, np.ones((2, 2, 1), dtype=np.uint8))
-                          .astype(np.uint8))
-
-
 def test_incremental_dedup_equals_full_recompute(spark, tmp_ckpt):
     """Cumulative union of per-batch incremental candidates == one full
     minhash_lsh_candidates pass over the whole corpus (batch boundaries
@@ -563,24 +411,6 @@ def test_stop_shingle_stats(spark):
     assert 0 < r.dropped_frac < 1
     r_off = stop_shingle_stats(docs, n=5, max_shingle_freq=None).first()
     assert r_off.dropped_rows == 0 and r_off.dropped_frac == 0.0
-
-
-def test_ivf_short_hash_sample_guard(spark):
-    """sample_size small enough that m>=2 and the limited sample is shorter
-    than n_cells: must fall back (re-pull / replacement) instead of raising
-    ValueError in rng.choice."""
-    from sbustreamspot_core_spark.operators.ann import brute_force_topk, ivf_topk
-
-    rng = np.random.default_rng(7)
-    rows = [(i, rng.normal(size=8).astype(float).tolist()) for i in range(64)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = ivf_topk(vecs, vecs.filter("vec_id < 2"), k=3, n_cells=8,
-                   n_probe=8, sample_size=4)
-    got = {(r.query_id, r.rank, r.neighbor_id) for r in out.collect()}
-    # n_probe == n_cells probes everything -> exact equality with brute force
-    want = {(r.query_id, r.rank, r.neighbor_id) for r in brute_force_topk(
-        vecs, vecs.filter("vec_id < 2"), k=3).collect()}
-    assert got == want
 
 
 def test_encode_url_ids_drops_null_urls(spark):

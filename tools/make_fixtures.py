@@ -182,215 +182,6 @@ def pages_expected_fixtures(out_dir: str) -> tuple[str, str]:
     return o1, o2
 
 
-def media_fixtures(out_dir: str) -> tuple[str, str]:
-    """PNG/WAV payloads with expected decode outputs.
-
-    NOT circular w.r.t. the decoder: source pixel/PCM arrays are generated
-    first (seeded numpy), the expected columns (dims + md5 of the raw
-    array bytes) are computed from those SOURCE arrays, and only then are
-    the arrays encoded into the committed payloads.  The driver gate thus
-    checks that the distributed decode recovers the pre-encoding data.
-    PNGs cycle color types (gray/RGB/gray-alpha/RGBA) and use every row
-    filter 0-4; WAVs are written by stdlib ``wave`` (independent writer).
-    """
-    import hashlib
-
-    from sbustreamspot_core_spark.functions.codecs import (
-        png_encode, wav_encode)
-
-    rng = np.random.default_rng(2016)
-    ids, payloads, ws, hs, chs, md5s = [], [], [], [], [], []
-    for i in range(24):
-        c = [1, 3, 2, 4][i % 4]
-        h, w = 5 + (i % 7), 4 + (i % 9)
-        arr = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-        filters = [(y + i) % 5 for y in range(h)]
-        ids.append(i)
-        payloads.append(png_encode(arr, filters=filters))
-        ws.append(w)
-        hs.append(h)
-        chs.append(c)
-        md5s.append(hashlib.md5(arr.tobytes()).hexdigest())
-    t1 = pa.table({
-        "id": pa.array(ids, type=pa.int64()), "payload": payloads,
-        "width": pa.array(ws, type=pa.int32()),
-        "height": pa.array(hs, type=pa.int32()),
-        "channels": pa.array(chs, type=pa.int32()), "pixel_md5": md5s})
-    o1 = os.path.join(out_dir, "png_expected.parquet")
-    pq.write_table(t1, o1, compression="zstd")
-
-    ids, payloads, rates, nfr, chs, md5s = [], [], [], [], [], []
-    for i in range(8):
-        ch = 1 + (i % 2)
-        n = 700 + 211 * i
-        rate = [8000, 16000, 44100][i % 3]
-        pcm = rng.integers(-32768, 32768, size=(n, ch)).astype("<i2")
-        ids.append(i)
-        payloads.append(wav_encode(rate, pcm))
-        rates.append(rate)
-        nfr.append(n)
-        chs.append(ch)
-        md5s.append(hashlib.md5(pcm.tobytes()).hexdigest())
-    t2 = pa.table({
-        "id": pa.array(ids, type=pa.int64()), "payload": payloads,
-        "sample_rate": pa.array(rates, type=pa.int32()),
-        "n_frames": pa.array(nfr, type=pa.int64()),
-        "channels": pa.array(chs, type=pa.int32()), "pcm_md5": md5s})
-    o2 = os.path.join(out_dir, "wav_expected.parquet")
-    pq.write_table(t2, o2, compression="zstd")
-    print(f"wrote {o1} (24 pngs), {o2} (8 wavs)")
-    return o1, o2
-
-
-def gif_fixtures(out_dir: str) -> str:
-    """GIF payloads with expected decode outputs (ids offset by 100 so the
-    driver row can UNION them with the PNG fixture).
-
-    Same non-circular pattern as media_fixtures: SOURCE RGB arrays are
-    generated first, expected dims + md5 are computed from those arrays,
-    and only then are they GIF-encoded (functions/gif.py).  GIF is
-    lossless over palettized content, so the gate is exact.  Covers
-    non-interlaced, interlaced, and multi-frame (animated) payloads — the
-    animated expectation pins the FIRST composited frame, which is what
-    decode_image returns.
-    """
-    import hashlib
-
-    from sbustreamspot_core_spark.functions.gif import gif_encode
-
-    rng = np.random.default_rng(89)
-    ids, payloads, ws, hs, chs, md5s = [], [], [], [], [], []
-    for i in range(12):
-        h, w = 6 + (i % 5), 5 + (i % 7)
-        n_colors = [2, 16, 200, 250][i % 4]
-        if i % 3 == 2:                       # animated: 3-5 frames
-            arr = (rng.integers(0, n_colors, size=(3 + i % 3, h, w))
-                   .astype(np.uint8)[..., None]
-                   * np.array([1, 1, 1], dtype=np.uint8))
-            payload = gif_encode(arr)
-            first = arr[0]
-        else:
-            gray = rng.integers(0, n_colors, size=(h, w)).astype(np.uint8)
-            first = np.stack([gray, (gray * 3) % 256, 255 - gray],
-                             axis=2).astype(np.uint8)
-            payload = gif_encode(first, interlace=(i % 3 == 1))
-        ids.append(100 + i)
-        payloads.append(payload)
-        ws.append(w)
-        hs.append(h)
-        chs.append(3)
-        md5s.append(hashlib.md5(first.tobytes()).hexdigest())
-    t = pa.table({
-        "id": pa.array(ids, type=pa.int64()), "payload": payloads,
-        "width": pa.array(ws, type=pa.int32()),
-        "height": pa.array(hs, type=pa.int32()),
-        "channels": pa.array(chs, type=pa.int32()), "pixel_md5": md5s})
-    o = os.path.join(out_dir, "gif_expected.parquet")
-    pq.write_table(t, o, compression="zstd")
-    print(f"wrote {o} (12 gifs)")
-    return o
-
-
-def jpeg_fixtures(out_dir: str) -> str:
-    """Baseline-JFIF payloads with expected decode outputs.
-
-    JPEG is LOSSY, so unlike the PNG fixture the gate cannot pin an md5 of
-    the source array.  Non-circularity is kept the same way: the SOURCE
-    pixel arrays are generated first and committed alongside the payloads,
-    and the expected `mae_bound` column is an A-PRIORI constant from JPEG
-    quantization theory (not measured from our decoder): MAE <= 5.0 at
-    quality >= 90 and <= 7.0 at quality 75 with 4:2:0 for natural-ish
-    content.  The driver row decodes the payload distributed, compares
-    against the committed pre-encoding pixels, and must land under the
-    bound with exact dims/channels.
-    """
-    from sbustreamspot_core_spark.functions.jpeg import jpeg_encode
-
-    rng = np.random.default_rng(81)
-    ids, payloads, srcs, ws, hs, chs, bounds = [], [], [], [], [], [], []
-    for i in range(12):
-        h, w = 24 + 8 * (i % 3) + (i % 5), 32 + 8 * (i % 4) + (i % 7)
-        yy, xx = np.mgrid[0:h, 0:w]
-        if i % 4 == 0:                       # grayscale gradient + noise
-            arr = np.clip((yy * 3 + xx * 2) % 256
-                          + rng.normal(0, 4, (h, w)), 0, 255).astype(np.uint8)
-            c = 1
-        else:                                # RGB gradients + noise
-            arr = np.zeros((h, w, 3))
-            arr[..., 0] = (yy * 3 + xx * 2) % 256
-            arr[..., 1] = (yy * 5 + 40 * (i % 3)) % 256
-            arr[..., 2] = (xx * 4 + 10 * i) % 256
-            arr = np.clip(arr + rng.normal(0, 4, arr.shape),
-                          0, 255).astype(np.uint8)
-            c = 3
-        quality, sub, bound = [(95, 1, 5.0), (90, 1, 5.0), (75, 2, 7.0),
-                               (95, 2, 5.0)][i % 4]
-        if c == 1:
-            sub = 1
-        ids.append(i)
-        payloads.append(jpeg_encode(arr, quality=quality, subsample=sub))
-        srcs.append(arr.tobytes())
-        ws.append(w)
-        hs.append(h)
-        chs.append(c)
-        bounds.append(bound)
-    t = pa.table({
-        "id": pa.array(ids, type=pa.int64()), "payload": payloads,
-        "src_pixels": srcs,
-        "width": pa.array(ws, type=pa.int32()),
-        "height": pa.array(hs, type=pa.int32()),
-        "channels": pa.array(chs, type=pa.int32()),
-        "mae_bound": pa.array(bounds, type=pa.float64())})
-    o = os.path.join(out_dir, "jpeg_expected.parquet")
-    pq.write_table(t, o, compression="zstd")
-    print(f"wrote {o} (12 jpegs)")
-    return o
-
-
-def avi_fixtures(out_dir: str) -> str:
-    """MJPEG-AVI payloads with expected FIRST-frame decode outputs.
-
-    Same non-circular pattern as jpeg_fixtures: the source frame arrays
-    are generated first, committed pre-encoding, and the gate bound is
-    the a-priori JPEG quantization constant (MAE <= 5.0 at quality >= 90,
-    4:4:4).  decode_image pins the first frame of each container, so the
-    schema matches jpeg_expected exactly and the driver row unions both.
-    Ids start at 100 to stay disjoint from the JPEG fixture."""
-    from sbustreamspot_core_spark.functions.avi import avi_encode
-
-    rng = np.random.default_rng(82)
-    ids, payloads, srcs, ws, hs, chs, bounds = [], [], [], [], [], [], []
-    for i in range(4):
-        n = 3 + i                            # 3..6 frames
-        h, w = 16 + 8 * (i % 2), 24 + 8 * (i % 3)
-        yy, xx = np.mgrid[0:h, 0:w]
-        frames = np.zeros((n, h, w, 3))
-        for f in range(n):
-            frames[f, ..., 0] = (yy * 3 + xx * 2 + 10 * f) % 256
-            frames[f, ..., 1] = (yy * 5 + 7 * f + 40 * i) % 256
-            frames[f, ..., 2] = (xx * 4 + 3 * f + 10 * i) % 256
-        frames = np.clip(frames + rng.normal(0, 4, frames.shape),
-                         0, 255).astype(np.uint8)
-        ids.append(100 + i)
-        payloads.append(avi_encode(frames, fps=5.0 + i, quality=95))
-        srcs.append(frames[0].tobytes())
-        ws.append(w)
-        hs.append(h)
-        chs.append(3)
-        bounds.append(5.0)
-    t = pa.table({
-        "id": pa.array(ids, type=pa.int64()), "payload": payloads,
-        "src_pixels": srcs,
-        "width": pa.array(ws, type=pa.int32()),
-        "height": pa.array(hs, type=pa.int32()),
-        "channels": pa.array(chs, type=pa.int32()),
-        "mae_bound": pa.array(bounds, type=pa.float64())})
-    o = os.path.join(out_dir, "avi_expected.parquet")
-    pq.write_table(t, o, compression="zstd")
-    print(f"wrote {o} (4 avis)")
-    return o
-
-
 def snaptable_fixture(out_dir: str) -> str:
     """Committed SnapTable for the time-travel/changelog driver row
     (q_snaptable_timetravel): three single-file appends under a fixed
@@ -430,10 +221,6 @@ def main() -> None:
     bootstrap_clusters_file(out_dir)
     mt19937_stream_fixture(out_dir)
     pages_expected_fixtures(out_dir)
-    media_fixtures(out_dir)
-    gif_fixtures(out_dir)
-    jpeg_fixtures(out_dir)
-    avi_fixtures(out_dir)
     snaptable_fixture(out_dir)
 
 

@@ -19,7 +19,7 @@ import __spark_entry__ as entry_mod
 from sbustreamspot_core_spark.session import get_spark
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 def normalize(rows, cols):
